@@ -39,17 +39,21 @@ writes postings → doclens → meta LAST; a crash anywhere leaves a store the
 loader refuses (missing meta, or store_sig mismatch), never a silently
 inconsistent one.
 
-Incremental maintenance (the `index_maintenance` delta-segment + tombstone
-pattern): ``path + '.delta'`` (postings, bucket-partitioned so the term
-filter prunes it too), ``path + '.dldelta'`` (doclens), and
-``path + '.tombstones'``. The DOC-LEVEL membership authority is the dldelta
-id set: live postings = (base anti dldelta-ids) ∪ (delta semi dldelta-ids)
-− tombstones, so upsert can write the postings delta FIRST — orphan
-postings rows from a crash before the dldelta swap are ignored (the old
-doc version keeps serving) until the upsert is replayed. Unlike the MaxSim
-store (which must refuse empty docs), a doc that tokenizes to zero terms is
-fully representable here: a dl=0 doclen row and no postings — it counts
-toward N/avgdl and matches nothing, exactly the on-the-fly semantics.
+Incremental maintenance is the `index_maintenance` delta-segment +
+tombstone lifecycle (crash windows stated there once), with two
+differences:
+- dldelta membership: besides ``path + '.delta'`` (postings,
+  bucket-partitioned so the term filter prunes it too) there is
+  ``path + '.dldelta'`` (doclens), and the dldelta id set is the
+  DOC-LEVEL membership authority: live postings = (base anti dldelta-ids)
+  ∪ (delta semi dldelta-ids) − tombstones. Upsert writes the postings
+  delta FIRST, so orphan postings rows from a crash before the dldelta
+  swap are ignored (the old doc version keeps serving) until the upsert
+  is replayed; compaction clears the dldelta first for the same reason.
+- empty docs are allowed: a doc that tokenizes to zero terms is a dl=0
+  doclen row with no postings — it counts toward N/avgdl and matches
+  nothing, exactly the on-the-fly semantics (the MaxSim and ColBERTv2
+  stores must refuse such docs).
 
 Scale shape (100 TB): serving reads ≤ q postings-list partitions of a store
 that is a small multiple of the corpus's TOKEN count in fixed-width rows —
@@ -61,13 +65,24 @@ or one narrow-column agg (live). The final top-k is TakeOrderedAndProject.
 from __future__ import annotations
 
 import hashlib
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from photo_vector_search_spark.functions.text import tokens
+from photo_vector_search_spark.operators.ann import _file_build_ids, _store_signature
 from photo_vector_search_spark.operators.bm25 import BM25_B, BM25_K1, query_terms
+from photo_vector_search_spark.operators.index_maintenance import (
+    _clear_side_tables,
+    _id_batch,
+    _merge_side_table,
+    _overlay,
+    _read_meta,
+    _restamp_meta,
+    _side_tables,
+    _tombstone,
+)
+from photo_vector_search_spark.operators.store import snapshot_overwrite
 
 N_BUCKETS = 64
 
@@ -137,16 +152,10 @@ def build_bm25_store(
     rest."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     spark = docs.sparkSession
     base = _tokenized(docs, id_col, text_col)
     doclens = base.select(id_col, F.size("_toks").alias("dl"))
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
-    n_docs = int(stats["n"])
-    sum_dl = int(stats["s"]) if stats["s"] is not None else 0
+    n_docs, sum_dl = _dl_stats(doclens)
     if n_docs == 0:
         raise ValueError(
             "build_bm25_store: no document has non-NULL text — nothing to "
@@ -182,7 +191,7 @@ def build_bm25_store(
     )
     meta = {
         "build_id": build_id,
-        "store_sig": _postings_sig(path),
+        "store_sig": _store_signature(path),
         "id_col": id_col,
         "text_col": text_col,
         "n_buckets": n_buckets,
@@ -200,18 +209,16 @@ _META_SCHEMA = (
     "build_id string, store_sig string, id_col string, text_col string, "
     "n_buckets int, n_docs long, sum_dl long"
 )
+_TABLES = ("", ".doclens", ".meta")
+# membership authority first: compaction clears in this order, so a crash
+# mid-cleanup never leaves a doclens delta without its postings delta
+_SIDES = (".dldelta", ".delta", ".tombstones")
 
 
-def _postings_sig(path: str) -> str:
-    from photo_vector_search_spark.operators.ann import _store_signature
-
-    return _store_signature(path)
-
-
-def _file_build_ids(path: str) -> set:
-    from photo_vector_search_spark.operators.ann import _file_build_ids as f
-
-    return f(path)
+def _dl_stats(doclens: DataFrame) -> tuple[int, int]:
+    """(N, sum of doc lengths) of a doclens frame — one narrow agg job."""
+    row = doclens.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")).first()
+    return int(row["n"]), int(row["s"] or 0)
 
 
 def load_bm25_store(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
@@ -220,30 +227,8 @@ def load_bm25_store(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     directory still matches the recorded content signature before returning
     anything a query could consume (torn builds/compactions and post-hoc
     rewrites are refused, not served)."""
-    import os
-
-    from photo_vector_search_spark.operators.store import recover_store
-
-    for suffix in ("", ".doclens", ".meta"):
-        recover_store(path + suffix)
-    missing = [
-        s or "postings"
-        for s in ("", ".doclens", ".meta")
-        if not os.path.isdir(path + s)
-    ]
-    if missing:
-        raise ValueError(
-            f"no BM25 store at {path!r} (missing: {missing}) — run "
-            "build_bm25_store first"
-        )
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"BM25 store sidecar at {path + '.meta'!r} has {len(meta_rows)} "
-            "rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0].asDict()
-    sig = _postings_sig(path)
+    meta = _read_meta(spark, path, "BM25", _TABLES).asDict()
+    sig = _store_signature(path)
     if sig != meta["store_sig"]:
         raise ValueError(
             f"BM25 store at {path!r} does not match its recorded content "
@@ -556,8 +541,21 @@ def rm3_store_batch_topk(
 
 
 # ---------------------------------------------------------------------------
-# incremental maintenance — the index_maintenance delta/tombstone pattern
+# incremental maintenance — the index_maintenance delta/tombstone lifecycle
 # ---------------------------------------------------------------------------
+
+
+def _bm25_overlay(postings, doclens, dldelta, delta, ts, id_col):
+    """(live postings, live doclens). The dldelta id set is the doc-level
+    membership authority: postings delta rows whose id is not in it are
+    crash orphans and are ignored (module docstring)."""
+    fresh = None
+    if delta is not None and dldelta is not None:
+        fresh = delta.join(F.broadcast(dldelta.select(id_col)), id_col, "left_semi")
+    return (
+        _overlay(postings, fresh, dldelta, ts, id_col),
+        _overlay(doclens, dldelta, dldelta, ts, id_col),
+    )
 
 
 def upsert_bm25_store(spark, path: str, new_docs: DataFrame) -> int:
@@ -574,25 +572,16 @@ def upsert_bm25_store(spark, path: str, new_docs: DataFrame) -> int:
     are refused (unindexable — delete those ids instead); EMPTY-text docs
     are fine (a dl=0 doclen row, no postings — they count toward avgdl and
     match nothing, the on-the-fly semantics)."""
-    from photo_vector_search_spark.operators.index_maintenance import (
-        _check_build,
-        _read_side_table,
-    )
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _, _, meta = load_bm25_store(spark, path)
-    id_col, text_col = meta["id_col"], meta["text_col"]
-    n_new = new_docs.count()
+    id_col, text_col, build_id = meta["id_col"], meta["text_col"], meta["build_id"]
+    ids, n_new = _id_batch(spark, new_docs.select(id_col), id_col, unique=True)
     if n_new == 0:
         return 0
-    ids = new_docs.select(F.col(id_col)).distinct()
-    if ids.count() != n_new:
-        raise ValueError("duplicate ids in the upsert batch — one row per id")
 
-    base = _tokenized(new_docs, id_col, text_col)
-    new_dl = base.select(
+    toks = _tokenized(new_docs, id_col, text_col)
+    new_dl = toks.select(
         id_col, F.size("_toks").alias("dl")
-    ).withColumn("build_id", F.lit(meta["build_id"]))
+    ).withColumn("build_id", F.lit(build_id))
     n_indexable = new_dl.count()
     if n_indexable != n_new:
         raise ValueError(
@@ -600,136 +589,43 @@ def upsert_bm25_store(spark, path: str, new_docs: DataFrame) -> int:
             "unindexable doc cannot shadow its old version; delete those "
             "ids instead (delete_from_bm25_store)"
         )
-    new_post = _postings_of(base, id_col, meta["n_buckets"]).withColumn(
-        "build_id", F.lit(meta["build_id"])
+    new_post = _postings_of(toks, id_col, meta["n_buckets"]).withColumn(
+        "build_id", F.lit(build_id)
     )
-
-    delta_path = path + ".delta"
-    old_delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, old_delta, meta["build_id"], "postings delta")
-    if old_delta is not None:
-        new_post = new_post.unionByName(
-            old_delta.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    # materialize BEFORE the swap — a lazy plan reading the old delta dir
-    # would race its own overwrite (the maxsim_maintenance rule)
-    new_post = new_post.localCheckpoint(eager=True)
-    snapshot_overwrite(new_post, delta_path, partition_by=["term_bucket"])
-
-    dl_path = path + ".dldelta"
-    old_dl = _read_side_table(spark, dl_path)
-    _check_build(dl_path, old_dl, meta["build_id"], "doclens delta")
-    if old_dl is not None:
-        new_dl = new_dl.unionByName(
-            old_dl.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    new_dl = new_dl.localCheckpoint(eager=True)
-    snapshot_overwrite(new_dl, dl_path)
-
-    ts_path = path + ".tombstones"
-    ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, ts, meta["build_id"], "tombstone set")
-    if ts is not None:
-        kept = ts.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, ts_path)
+    _merge_side_table(
+        spark, path, ".delta", build_id, ids, id_col, rows=new_post,
+        partition_by=["term_bucket"],
+    )
+    _merge_side_table(spark, path, ".dldelta", build_id, ids, id_col, rows=new_dl)
+    _merge_side_table(spark, path, ".tombstones", build_id, ids, id_col)
     return n_new
 
 
 def delete_from_bm25_store(spark, path: str, doc_ids) -> int:
     """Tombstone ``doc_ids`` (a list or a one-column DataFrame) and drop
     them from both delta segments. Returns the number of ids tombstoned."""
-    from photo_vector_search_spark.operators.index_maintenance import (
-        _check_build,
-        _read_side_table,
-    )
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _, _, meta = load_bm25_store(spark, path)
-    id_col = meta["id_col"]
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(v),) for v in doc_ids], f"`{id_col}` long"
-        ).distinct()
-    n = ids.count()
+    id_col, build_id = meta["id_col"], meta["build_id"]
+    ids, n = _id_batch(spark, doc_ids, id_col)
     if n == 0:
         return 0
-
-    ts_path = path + ".tombstones"
-    old_ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, old_ts, meta["build_id"], "tombstone set")
-    new_ts = ids.withColumn("build_id", F.lit(meta["build_id"]))
-    if old_ts is not None:
-        new_ts = new_ts.unionByName(
-            old_ts.join(F.broadcast(ids), id_col, "left_anti")
-        ).distinct()
-    snapshot_overwrite(new_ts.localCheckpoint(eager=True), ts_path)
-
+    _tombstone(spark, path, build_id, ids, id_col)
     for side, part in ((".delta", ["term_bucket"]), (".dldelta", None)):
-        seg = _read_side_table(spark, path + side)
-        _check_build(path + side, seg, meta["build_id"], f"{side} segment")
-        if seg is not None:
-            kept = seg.join(
-                F.broadcast(ids), id_col, "left_anti"
-            ).localCheckpoint(eager=True)
-            snapshot_overwrite(kept, path + side, partition_by=part)
+        _merge_side_table(spark, path, side, build_id, ids, id_col, partition_by=part)
     return n
 
 
 def load_live_bm25(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """(live postings, live doclens, meta with LIVE n_docs/sum_dl): delta ∪
     (base anti dldelta-ids) − tombstones, every side table build-checked.
-    Postings delta rows whose id is NOT in the dldelta are crash orphans
-    and are ignored (module docstring). The bucket/term filters push
-    through the union, so the base scan keeps its partition pruning; live
-    stats are ONE agg over the narrow doclens view."""
-    from photo_vector_search_spark.operators.index_maintenance import (
-        _check_build,
-        _read_side_table,
-    )
-
+    The bucket/term filters push through the union, so the base scan keeps
+    its partition pruning; live stats are ONE agg over the narrow doclens
+    view."""
     postings, doclens, meta = load_bm25_store(spark, path)
-    id_col = meta["id_col"]
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "postings delta")
-    dldelta = _read_side_table(spark, path + ".dldelta")
-    _check_build(path + ".dldelta", dldelta, meta["build_id"], "doclens delta")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live_post, live_dl = postings, doclens
-    if dldelta is not None:
-        delta_ids = dldelta.select(id_col)
-        live_dl = doclens.join(
-            F.broadcast(delta_ids), id_col, "left_anti"
-        ).unionByName(dldelta.select(*doclens.columns))
-        live_post = postings.join(
-            F.broadcast(delta_ids), id_col, "left_anti"
-        )
-        if delta is not None:
-            live_post = live_post.unionByName(
-                delta.join(F.broadcast(delta_ids), id_col, "left_semi").select(
-                    *postings.columns
-                )
-            )
-    if ts is not None:
-        live_post = live_post.join(
-            F.broadcast(ts.select(id_col)), id_col, "left_anti"
-        )
-        live_dl = live_dl.join(
-            F.broadcast(ts.select(id_col)), id_col, "left_anti"
-        )
-
-    stats = live_dl.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
-    live_meta = dict(meta)
-    live_meta["n_docs"] = int(stats["n"])
-    live_meta["sum_dl"] = int(stats["s"]) if stats["s"] is not None else 0
-    return live_post, live_dl, live_meta
+    sides = _side_tables(spark, path, meta["build_id"], *_SIDES)
+    live_post, live_dl = _bm25_overlay(postings, doclens, *sides, meta["id_col"])
+    n_docs, sum_dl = _dl_stats(live_dl)
+    return live_post, live_dl, {**meta, "n_docs": n_docs, "sum_dl": sum_dl}
 
 
 def live_bm25_topk(
@@ -754,70 +650,20 @@ def live_bm25_topk(
 
 def compact_bm25_store(spark, path: str) -> int:
     """Fold the deltas and tombstones into the base postings/doclens,
-    refresh the meta stats, and clear the side tables. ``build_id`` stays
-    STABLE (a stale side table restored after compaction overlays
-    idempotently — its rows are already folded; the anti-join + union
-    reproduces the identical view); ``store_sig`` and the base (n_docs,
-    sum_dl) are restamped. Reads the RAW tables — side tables checked
-    against the META build id, the signature deliberately NOT verified —
-    so it converges when re-run from any crash point; `load_bm25_store`
-    refuses to SERVE any intermediate state. Returns the live doc count."""
-    from photo_vector_search_spark.operators.index_maintenance import (
-        _check_build,
-        _read_side_table,
+    restamp the meta sidecar's ``store_sig`` and base (n_docs, sum_dl)
+    (``build_id`` is stable), and clear the side tables. Reads the RAW
+    tables, so it converges when re-run from any crash point;
+    `load_bm25_store` refuses to SERVE any intermediate state. Returns the
+    live doc count."""
+    meta = _read_meta(spark, path, "BM25", _TABLES).asDict()
+    sides = _side_tables(spark, path, meta["build_id"], *_SIDES)
+    live_post, live_dl = _bm25_overlay(
+        spark.read.parquet(path), spark.read.parquet(path + ".doclens"),
+        *sides, meta["id_col"],
     )
-    from photo_vector_search_spark.operators.store import (
-        recover_store,
-        snapshot_overwrite,
-    )
-
-    for suffix in ("", ".doclens", ".meta"):
-        recover_store(path + suffix)
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"BM25 store sidecar at {path + '.meta'!r} has {len(meta_rows)} "
-            "rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0].asDict()
-    id_col = meta["id_col"]
-    postings = spark.read.parquet(path)
-    doclens = spark.read.parquet(path + ".doclens")
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "postings delta")
-    dldelta = _read_side_table(spark, path + ".dldelta")
-    _check_build(path + ".dldelta", dldelta, meta["build_id"], "doclens delta")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live_post, live_dl = postings, doclens
-    if dldelta is not None:
-        delta_ids = dldelta.select(id_col)
-        live_dl = doclens.join(
-            F.broadcast(delta_ids), id_col, "left_anti"
-        ).unionByName(dldelta.select(*doclens.columns))
-        live_post = postings.join(F.broadcast(delta_ids), id_col, "left_anti")
-        if delta is not None:
-            live_post = live_post.unionByName(
-                delta.join(F.broadcast(delta_ids), id_col, "left_semi").select(
-                    *postings.columns
-                )
-            )
-    if ts is not None:
-        live_post = live_post.join(
-            F.broadcast(ts.select(id_col)), id_col, "left_anti"
-        )
-        live_dl = live_dl.join(
-            F.broadcast(ts.select(id_col)), id_col, "left_anti"
-        )
-
     live_post = live_post.localCheckpoint(eager=True)
     live_dl = live_dl.localCheckpoint(eager=True)
-    stats = live_dl.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
-    n_docs = int(stats["n"])
-    sum_dl = int(stats["s"]) if stats["s"] is not None else 0
+    n_docs, sum_dl = _dl_stats(live_dl)
     if sum_dl == 0:
         # n_docs == 0 (all tombstoned) or only zero-token docs remain:
         # either way the compacted postings table has ZERO rows, and a
@@ -837,24 +683,8 @@ def compact_bm25_store(spark, path: str) -> int:
         partition_by=["term_bucket"],
     )
     snapshot_overwrite(live_dl, path + ".doclens")
-    snapshot_overwrite(
-        spark.createDataFrame(
-            [
-                (
-                    meta["build_id"],
-                    _postings_sig(path),
-                    id_col,
-                    meta["text_col"],
-                    meta["n_buckets"],
-                    n_docs,
-                    sum_dl,
-                )
-            ],
-            _META_SCHEMA,
-        ),
-        path + ".meta",
+    _restamp_meta(
+        spark, path, _META_SCHEMA, {**meta, "n_docs": n_docs, "sum_dl": sum_dl}
     )
-    for side in (".tombstones", ".delta", ".dldelta"):
-        shutil.rmtree(path + side, ignore_errors=True)
-        shutil.rmtree(path + side + ".old", ignore_errors=True)
+    _clear_side_tables(path, _SIDES)
     return n_docs

@@ -1,93 +1,51 @@
 """Incremental maintenance for the ColBERTv2 residual-compressed token
-store — upsert/delete/live-serve/compact WITHOUT re-fitting the quantizer
-or rewriting the corpus codes (the `index_maintenance` delta-segment +
-tombstone pattern, applied to the compressed late-interaction rung so that
-EVERY persisted serving index — IVF, SQ8, IVF,SQ8, PQ, BQ, MaxSim, BM25,
-and now the compressed token store — grows incrementally).
+store — the `index_maintenance` delta-segment + tombstone lifecycle
+(layout, live view and crash windows are stated there once) applied to a
+`token_compression.build_colbertv2_store` store, so the compressed
+late-interaction rung grows without re-fitting the quantizer or rewriting
+the corpus codes.
 
-Layout around a `token_compression.build_colbertv2_store` store at ``path``:
-- ``path``                 base codes (id, pooled, tok_cids, tok_codes) —
-                           FROZEN between compactions.
-- ``path + '.delta'``      upserted rows, re-embedded AND re-encoded against
-                           the build's FROZEN quantizer (token centroids +
-                           residual range — the clip convention from
-                           `encode_sq8`: residuals outside the fitted range
-                           clip to the edges; geometry drifts only until
-                           the next full rebuild). O(delta) rewrite.
-- ``path + '.tombstones'`` deleted ids.
-Both side tables carry the base ``build_id`` (a content hash over params +
-quantizer bytes, so a side table encoded under a different codebook is
-refused — serving foreign codes would decode garbage silently).
-
-Live view = delta ∪ (base anti delta-ids) − tombstones; side tables are
-broadcast-sized joins; the pooled-prefilter and candidate IN-filters push
-through the union so the base scan keeps its id-sorted row-group pruning.
-
-Crash windows (the `maxsim_maintenance` contract, verbatim semantics):
-- upsert writes the delta BEFORE reviving tombstones — a crash between the
-  two swaps leaves a re-upserted, previously-tombstoned id invisible until
-  the upsert is replayed.
-- compact rewrites the base (directory signature changes), so it rewrites
-  the meta sidecar with the new ``store_sig``; ``build_id`` is STABLE, so
-  side tables and the quantizer sidecar need no restamp. compact reads the
-  RAW tables and is convergent from any crash point;
-  `load_colbertv2_store` refuses to SERVE any intermediate state.
-- like the MaxSim store (and unlike the BM25 store), a doc that tokenizes
-  to ZERO tokens has no code rows and cannot shadow its old version — the
-  upsert refuses it; delete explicitly.
+What differs here:
+- the encode step re-embeds AND re-encodes only the new docs against the
+  build's FROZEN quantizer (token centroids + residual range; residuals
+  outside the fitted range clip to the edges, the `encode_sq8`
+  convention). ``build_id`` hashes params + quantizer bytes, so a side
+  table encoded under another codebook is refused — serving foreign codes
+  would decode garbage silently.
+- empty docs are refused, as in the MaxSim store: a zero-token doc has no
+  code rows and cannot shadow its old version; delete it explicitly.
+- compaction rewrites the base range-partitioned and id-sorted (the build
+  layout) and restamps the meta sidecar; the quantizer sidecar is
+  untouched.
 """
 
 from __future__ import annotations
-
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from photo_vector_search_spark.operators.index_maintenance import (
-    _check_build,
-    _read_side_table,
+    _clear_side_tables,
+    _id_batch,
+    _merge_side_table,
+    _overlay,
+    _restamp_meta,
+    _side_tables,
+    _tombstone,
 )
+from photo_vector_search_spark.operators.maxsim_maintenance import (
+    _embed_new_docs,
+    _meta_keep_cols,
+    _raw_live,
+    _stamp_nonempty,
+)
+from photo_vector_search_spark.operators.store import snapshot_overwrite
 from photo_vector_search_spark.operators.token_compression import (
+    _META_SCHEMA,
     encode_token_matrices,
     load_colbertv2_store,
     maxsim_topk_compressed,
 )
-
-
-def _encode_against_build(meta, quant, new_docs: DataFrame, text_col: str):
-    """Embed and encode ONLY the new docs under the build's frozen
-    parameters (max_tokens, dim, codebook, residual range) — the O(delta)
-    half of the contract. Output matches the base store's columns: a
-    keep_cols store requires the same metadata columns on the batch."""
-    from photo_vector_search_spark.operators.late_interaction import (
-        doc_token_embeddings,
-        with_pooled_column,
-    )
-    from photo_vector_search_spark.operators.maxsim_maintenance import (
-        _meta_keep_cols,
-    )
-
-    keep = _meta_keep_cols(meta)
-    missing = [c for c in keep if c not in new_docs.columns]
-    if missing:
-        raise ValueError(
-            f"store was built with keep_cols={keep} but the upsert batch "
-            f"lacks {missing} — supply the metadata columns"
-        )
-    toks = with_pooled_column(
-        doc_token_embeddings(
-            new_docs,
-            text_col=text_col,
-            id_col=meta["id_col"],
-            max_tokens=meta["max_tokens"],
-            dim=meta["dim"],
-        ),
-        id_col=meta["id_col"],
-    )
-    if keep:
-        toks = toks.join(new_docs.select(meta["id_col"], *keep), meta["id_col"])
-    return encode_token_matrices(toks, quant, id_col=meta["id_col"])
 
 
 def upsert_colbertv2_store(
@@ -97,85 +55,32 @@ def upsert_colbertv2_store(
     them into the delta segment (same-id delta rows replaced, tombstones
     revived). Returns the number of upserted docs. O(new + delta) — the
     base codes are never rewritten."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _base, quant, meta = load_colbertv2_store(spark, path)
-    id_col = meta["id_col"]
-    n_new = new_docs.count()
+    id_col, build_id = meta["id_col"], meta["build_id"]
+    ids, n_new = _id_batch(spark, new_docs.select(id_col), id_col, unique=True)
     if n_new == 0:
         return 0
-    ids = new_docs.select(F.col(id_col)).distinct()
-    if ids.count() != n_new:
-        raise ValueError("duplicate ids in the upsert batch — one row per id")
-    coded = _encode_against_build(meta, quant, new_docs, text_col).withColumn(
-        "build_id", F.lit(meta["build_id"])
+    coded = _stamp_nonempty(
+        encode_token_matrices(
+            _embed_new_docs(meta, new_docs, text_col), quant, id_col=id_col
+        ),
+        meta, n_new, "delete_from_colbertv2_store",
     )
-    n_coded = coded.count()
-    if n_coded != n_new:
-        raise ValueError(
-            f"{n_new - n_coded} upsert doc(s) have NULL/empty text and "
-            "produce no token codes — an empty doc cannot shadow its old "
-            "version; delete those ids instead (delete_from_colbertv2_store)"
-        )
-
-    delta_path = path + ".delta"
-    old_delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, old_delta, meta["build_id"], "delta segment")
-    if old_delta is not None:
-        coded = coded.unionByName(
-            old_delta.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    # materialize BEFORE the swap — a lazy plan reading the old delta dir
-    # would race its own overwrite (the maxsim_maintenance rule)
-    coded = coded.localCheckpoint(eager=True)
-    snapshot_overwrite(coded, delta_path)
-
-    ts_path = path + ".tombstones"
-    ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, ts, meta["build_id"], "tombstone set")
-    if ts is not None:
-        kept = ts.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, ts_path)
+    _merge_side_table(spark, path, ".delta", build_id, ids, id_col, rows=coded)
+    _merge_side_table(spark, path, ".tombstones", build_id, ids, id_col)
     return n_new
 
 
 def delete_from_colbertv2_store(spark, path: str, doc_ids) -> int:
     """Tombstone ``doc_ids`` (a list or a one-column DataFrame) and drop
     them from the delta. Returns the number of ids tombstoned."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _base, _quant, meta = load_colbertv2_store(spark, path)
-    id_col = meta["id_col"]
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(v),) for v in doc_ids], f"`{id_col}` long"
-        ).distinct()
-    n = ids.count()
+    id_col, build_id = meta["id_col"], meta["build_id"]
+    ids, n = _id_batch(spark, doc_ids, id_col)
     if n == 0:
         return 0
-
-    ts_path = path + ".tombstones"
-    old_ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, old_ts, meta["build_id"], "tombstone set")
-    new_ts = ids.withColumn("build_id", F.lit(meta["build_id"]))
-    if old_ts is not None:
-        new_ts = new_ts.unionByName(
-            old_ts.join(F.broadcast(ids), id_col, "left_anti")
-        ).distinct()
-    snapshot_overwrite(new_ts.localCheckpoint(eager=True), ts_path)
-
-    delta_path = path + ".delta"
-    delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, delta, meta["build_id"], "delta segment")
-    if delta is not None:
-        kept = delta.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, delta_path)
+    _tombstone(spark, path, build_id, ids, id_col)
+    _merge_side_table(spark, path, ".delta", build_id, ids, id_col)
     return n
 
 
@@ -184,20 +89,8 @@ def load_live_colbertv2(spark, path: str):
     − tombstones, every side table build-checked. Prefilter/candidate
     filters push through the union, so the base keeps its pruning."""
     base, quant, meta = load_colbertv2_store(spark, path)
-    id_col = meta["id_col"]
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-    return live, quant, meta
+    delta, ts = _side_tables(spark, path, meta["build_id"], ".delta", ".tombstones")
+    return _overlay(base, delta, delta, ts, meta["id_col"]), quant, meta
 
 
 def live_colbertv2_search(
@@ -246,75 +139,19 @@ def live_colbertv2_search(
 
 
 def compact_colbertv2_store(spark, path: str) -> int:
-    """Fold delta and tombstones into the base and clear them. ``build_id``
-    stays STABLE (params + quantizer hash — a stale side table restored
-    after compaction overlays idempotently); ``store_sig`` and ``n_docs``
-    are restamped. Reads the RAW tables — side tables checked against the
-    META build id, the signature deliberately NOT verified — so it
-    converges when re-run from any crash point; `load_colbertv2_store`
+    """Fold delta and tombstones into the base, restamp the meta sidecar's
+    ``store_sig`` and ``n_docs`` (``build_id`` is stable), and clear the
+    side tables. Convergent from any crash point; `load_colbertv2_store`
     refuses to SERVE any intermediate state. Returns the live doc count."""
-    from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import (
-        recover_store,
-        snapshot_overwrite,
-    )
-
-    for suffix in ("", ".quant", ".meta"):
-        recover_store(path + suffix)
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"ColBERTv2 store sidecar at {path + '.meta'!r} has "
-            f"{len(meta_rows)} rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0]
+    meta, live, n = _raw_live(spark, path, "ColBERTv2", ("", ".quant", ".meta"))
     id_col = meta["id_col"]
-    base = spark.read.parquet(path)
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-
-    live = live.localCheckpoint(eager=True)
-    n = live.count()
     # the build layout: range-partitioned + id-sorted for row-group pruning
     snapshot_overwrite(
         live.repartitionByRange(F.col(id_col)).sortWithinPartitions(id_col),
         path,
     )
-    from photo_vector_search_spark.operators.maxsim_maintenance import (
-        _meta_keep_cols,
-    )
-
-    snapshot_overwrite(
-        spark.createDataFrame(
-            [
-                (
-                    meta["build_id"],
-                    _store_signature(path),
-                    id_col,
-                    meta["max_tokens"],
-                    meta["dim"],
-                    n,
-                    meta["n_centroids"],
-                    ",".join(_meta_keep_cols(meta)),
-                )
-            ],
-            "build_id string, store_sig string, id_col string, "
-            "max_tokens int, dim int, n_docs long, n_centroids int, "
-            "keep_cols string",
-        ),
-        path + ".meta",
-    )
-    for side in (".tombstones", ".delta"):
-        shutil.rmtree(path + side, ignore_errors=True)
-        shutil.rmtree(path + side + ".old", ignore_errors=True)
+    _restamp_meta(spark, path, _META_SCHEMA, {
+        **meta.asDict(), "n_docs": n, "keep_cols": ",".join(_meta_keep_cols(meta)),
+    })
+    _clear_side_tables(path)
     return n

@@ -689,9 +689,7 @@ def build_maxsim_store(
                     ",".join(keep_cols),
                 )
             ],
-            "build_id string, store_sig string, id_col string, "
-            "max_tokens int, dim int, n_docs long, n_clusters int, "
-            "keep_cols string",
+            _META_SCHEMA,
         ),
         path + ".meta",
     )
@@ -707,6 +705,12 @@ def build_maxsim_store(
             path + ".centroids",
         )
     return build_id
+
+
+_META_SCHEMA = (
+    "build_id string, store_sig string, id_col string, max_tokens int, "
+    "dim int, n_docs long, n_clusters int, keep_cols string"
+)
 
 
 def _maxsim_build_id(id_col, max_tokens, dim, n_clusters, centroids) -> str:
@@ -759,20 +763,16 @@ def with_pooled_column(doc_toks: DataFrame, id_col: str = "doc_id") -> DataFrame
 
 
 def load_maxsim_store(spark, path: str):
-    """(token frame, meta row) for a `build_maxsim_store` store. Refuses a
-    torn pair: the store directory's recomputed content signature must equal
-    the sidecar's ``build_id`` (a crash between the two snapshot swaps, or
-    any out-of-band rewrite, fails here instead of silently serving token
+    """(token frame, meta row) for a `build_maxsim_store` store. Heals a
+    half-finished snapshot swap, then refuses a torn pair: the store
+    directory's recomputed content signature must equal the sidecar's
+    ``store_sig`` (a crash between the two snapshot swaps, or any
+    out-of-band rewrite, fails here instead of silently serving token
     matrices that don't match the recorded build)."""
     from photo_vector_search_spark.operators.ann import _store_signature
+    from photo_vector_search_spark.operators.index_maintenance import _read_meta
 
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"maxsim store sidecar at {path + '.meta'!r} has "
-            f"{len(meta_rows)} rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0]
+    meta = _read_meta(spark, path, "maxsim")
     sig = _store_signature(path)
     if sig != meta["store_sig"]:
         raise ValueError(
@@ -790,6 +790,9 @@ def _load_maxsim_centroids(spark, path: str, meta):
     refused — probing with stale centroids silently collapses recall."""
     import numpy as np
 
+    from photo_vector_search_spark.operators.store import recover_store
+
+    recover_store(path + ".centroids")
     rows = spark.read.parquet(path + ".centroids").collect()
     builds = {r["build_id"] for r in rows}
     if builds != {meta["build_id"]}:

@@ -1,67 +1,44 @@
-"""Incremental maintenance for the persisted MaxSim token store —
-upsert/delete/live-serve/compact WITHOUT re-embedding or rewriting the
-corpus (the delta-segment + tombstone pattern `index_maintenance` applies
-to the IVF,SQ8 store, extended to the late-interaction family so EVERY
-persisted serving index can grow incrementally; cf. the reference's
-incremental per-file upsert loop, photo_vector_search.py:84-117).
+"""Incremental maintenance for the persisted MaxSim token store — the
+`index_maintenance` delta-segment + tombstone lifecycle (layout, live view
+and crash windows are stated there once) applied to a
+`late_interaction.build_maxsim_store` store, so the late-interaction
+family grows without re-embedding or rewriting the corpus.
 
-Layout around a `late_interaction.build_maxsim_store` store at ``path``:
-- ``path``            base (id, tok_embs, pooled[, cluster_id]) — FROZEN
-                      between compactions; its content signature is the
-                      build id the meta sidecar records.
-- ``path + '.delta'`` upserted rows, re-embedded against the build's
-                      (max_tokens, dim) and — for clustered stores —
-                      assigned to the build's FROZEN centroids (the clip
-                      convention: probes stay valid, geometry drifts only
-                      until the next compaction). O(delta) rewrite.
-- ``path + '.tombstones'`` deleted ids. Both side tables carry the base
-                      ``build_id``; a side table from a different build is
-                      refused (serving stale-geometry rows silently would
-                      collapse recall).
-
-Live view = delta ∪ (base anti delta-ids) − tombstones. The cluster-probe
-filter pushes THROUGH the union, so the base scan keeps its hive-partition
-pruning; the side tables are broadcast-sized joins.
-
-Crash windows (all bounded, all heal on retry):
-- upsert writes the delta BEFORE reviving tombstones — a crash between the
-  two swaps leaves a re-upserted, previously-tombstoned id invisible until
-  the upsert is replayed (same window, same reasoning as
-  `index_maintenance.upsert_ivf_sq8_store`).
-- compact rewrites the base, which changes the store's directory
-  signature, so it rewrites the meta sidecar with the new ``store_sig``
-  (the ``build_id`` is STABLE — a params+centroids hash — so side tables
-  and the centroid sidecar need no restamp). A crash between the base
-  swap and the meta rewrite leaves a store `load_maxsim_store` refuses as
-  torn; compact reads the RAW tables (meta for params, side tables
-  checked against the META build id) and is convergent — re-running it
-  from any crash point folds the same live view and completes the
-  rewrite. A stale side table restored AFTER a successful compaction
-  carries the same stable build id and overlays idempotently (its rows
-  are already folded into the base; the anti-join + union reproduces the
-  identical view — the `index_maintenance` crash-sim semantics, pinned in
-  tests). Nothing is ever SERVED from a half-compacted state — the sig
-  check guarantees that.
+What differs here:
+- the encode step re-embeds ONLY the new docs under the build's frozen
+  (max_tokens, dim) and — for clustered stores — assigns them to the
+  build's FROZEN centroids; the delta is cluster-partitioned like the base.
+- empty docs are refused: a doc that tokenizes to ZERO tokens has no token
+  matrix, so no delta row could shadow its old version (delete it
+  instead). The BM25 store, by contrast, represents empty docs.
+- compaction restamps the meta sidecar (``store_sig``, ``n_docs``); the
+  centroid sidecar is untouched.
 """
 
 from __future__ import annotations
-
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from photo_vector_search_spark.operators.index_maintenance import (
-    _check_build,
-    _read_side_table,
+    _clear_side_tables,
+    _id_batch,
+    _merge_side_table,
+    _overlay,
+    _read_meta,
+    _restamp_meta,
+    _side_tables,
+    _tombstone,
 )
 from photo_vector_search_spark.operators.late_interaction import (
+    _META_SCHEMA,
     _load_maxsim_centroids,
     _serve_maxsim,
     doc_token_embeddings,
     load_maxsim_store,
     with_pooled_column,
 )
+from photo_vector_search_spark.operators.store import snapshot_overwrite
 
 
 def _base_partitioning(meta) -> list | None:
@@ -78,11 +55,12 @@ def _meta_keep_cols(meta) -> list[str]:
     return [c for c in (raw or "").split(",") if c]
 
 
-def _embed_against_build(spark, path, meta, new_docs: DataFrame, text_col: str):
-    """Re-embed ONLY the new docs under the build's frozen parameters
-    (max_tokens, dim, centroids) — the O(delta) half of the contract. A
-    keep_cols store requires the same metadata columns on the upsert batch
-    (delta rows must union with the base schema)."""
+def _embed_new_docs(meta, new_docs: DataFrame, text_col: str) -> DataFrame:
+    """Token matrices + pooled vectors of ONLY the new docs under the
+    build's frozen (max_tokens, dim) — the O(delta) half of the contract
+    shared by the MaxSim and ColBERTv2 stores. A keep_cols store requires
+    the same metadata columns on the upsert batch (delta rows must union
+    with the base schema)."""
     keep = _meta_keep_cols(meta)
     missing = [c for c in keep if c not in new_docs.columns]
     if missing:
@@ -102,14 +80,33 @@ def _embed_against_build(spark, path, meta, new_docs: DataFrame, text_col: str):
     )
     if keep:
         toks = toks.join(new_docs.select(meta["id_col"], *keep), meta["id_col"])
-    if meta["n_clusters"] >= 1:
-        from photo_vector_search_spark.operators.ann import assign_clusters
-
-        centroids = _load_maxsim_centroids(spark, path, meta)
-        toks = assign_clusters(
-            toks.withColumnRenamed("pooled", "embedding"), centroids
-        ).withColumnRenamed("embedding", "pooled")
     return toks
+
+
+def _stamp_nonempty(coded: DataFrame, meta, n_new: int, delete_fn: str) -> DataFrame:
+    """``coded`` stamped with the build id; refuses the batch when a doc
+    produced no row (NULL/empty text) — silently keeping its OLD base
+    version would violate delta-wins, so the caller decides."""
+    coded = coded.withColumn("build_id", F.lit(meta["build_id"]))
+    n_coded = coded.count()
+    if n_coded != n_new:
+        raise ValueError(
+            f"{n_new - n_coded} upsert doc(s) have NULL/empty text and "
+            "produce no token matrix — an empty doc cannot shadow its old "
+            f"version; delete those ids instead ({delete_fn})"
+        )
+    return coded
+
+
+def _raw_live(spark, path: str, kind: str, tables) -> tuple:
+    """(meta, materialized live view, its row count) from the RAW tables —
+    the compaction read, convergent from any crash point
+    (`index_maintenance` module docstring)."""
+    meta = _read_meta(spark, path, kind, tables)
+    delta, ts = _side_tables(spark, path, meta["build_id"], ".delta", ".tombstones")
+    live = _overlay(spark.read.parquet(path), delta, delta, ts, meta["id_col"])
+    live = live.localCheckpoint(eager=True)
+    return meta, live, live.count()
 
 
 def upsert_maxsim_store(
@@ -119,90 +116,41 @@ def upsert_maxsim_store(
     into the delta segment (same-id delta rows replaced, tombstones
     revived). Returns the number of upserted docs. O(new + delta) — the
     base is never rewritten; the embed pass runs over the NEW docs only."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
-    base, meta = load_maxsim_store(spark, path)
-    id_col = meta["id_col"]
-    n_new = new_docs.count()
+    _, meta = load_maxsim_store(spark, path)
+    id_col, build_id = meta["id_col"], meta["build_id"]
+    ids, n_new = _id_batch(spark, new_docs.select(id_col), id_col, unique=True)
     if n_new == 0:
         return 0
-    ids = new_docs.select(F.col(id_col)).distinct()
-    if ids.count() != n_new:
-        raise ValueError("duplicate ids in the upsert batch — one row per id")
-    coded = _embed_against_build(spark, path, meta, new_docs, text_col).withColumn(
-        "build_id", F.lit(meta["build_id"])
+    toks = _embed_new_docs(meta, new_docs, text_col)
+    if meta["n_clusters"] >= 1:
+        from photo_vector_search_spark.operators.ann import assign_clusters
+
+        centroids = _load_maxsim_centroids(spark, path, meta)
+        toks = assign_clusters(
+            toks.withColumnRenamed("pooled", "embedding"), centroids
+        ).withColumnRenamed("embedding", "pooled")
+    coded = _stamp_nonempty(toks, meta, n_new, "delete_from_maxsim_store")
+    _merge_side_table(
+        spark, path, ".delta", build_id, ids, id_col, rows=coded,
+        partition_by=_base_partitioning(meta),
     )
-    n_coded = coded.count()
-    if n_coded != n_new:
-        # a doc that tokenizes to ZERO tokens produces no token matrix and
-        # therefore no delta row — silently keeping its OLD base version
-        # would violate delta-wins; make the caller decide (delete it, or
-        # fix the text) instead of guessing
-        raise ValueError(
-            f"{n_new - n_coded} upsert doc(s) have NULL/empty text and "
-            "produce no token matrix — an empty doc cannot shadow its old "
-            "version; delete those ids instead (delete_from_maxsim_store)"
-        )
-
-    delta_path = path + ".delta"
-    old_delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, old_delta, meta["build_id"], "delta segment")
-    if old_delta is not None:
-        coded = coded.unionByName(
-            old_delta.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    # the new delta must be MATERIALIZED before the swap — a lazy plan
-    # reading the old delta dir would race its own overwrite
-    coded = coded.localCheckpoint(eager=True)
-    snapshot_overwrite(coded, delta_path, partition_by=_base_partitioning(meta))
-
-    # revive tombstoned ids (see module docstring for the crash window)
-    ts_path = path + ".tombstones"
-    ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, ts, meta["build_id"], "tombstone set")
-    if ts is not None:
-        kept = ts.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, ts_path)
+    _merge_side_table(spark, path, ".tombstones", build_id, ids, id_col)
     return n_new
 
 
 def delete_from_maxsim_store(spark, path: str, doc_ids) -> int:
     """Tombstone ``doc_ids`` (a list or a one-column DataFrame) and drop
     them from the delta. Returns the number of ids tombstoned."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _, meta = load_maxsim_store(spark, path)
-    id_col = meta["id_col"]
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(v),) for v in doc_ids], f"`{id_col}` long"
-        ).distinct()
-    n = ids.count()
+    id_col, build_id = meta["id_col"], meta["build_id"]
+    ids, n = _id_batch(spark, doc_ids, id_col)
     if n == 0:
         return 0
-
-    ts_path = path + ".tombstones"
-    old_ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, old_ts, meta["build_id"], "tombstone set")
-    new_ts = ids.withColumn("build_id", F.lit(meta["build_id"]))
-    if old_ts is not None:
-        new_ts = new_ts.unionByName(
-            old_ts.join(F.broadcast(ids), id_col, "left_anti")
-        ).distinct()
-    snapshot_overwrite(new_ts.localCheckpoint(eager=True), ts_path)
-
-    delta_path = path + ".delta"
-    delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, delta, meta["build_id"], "delta segment")
-    if delta is not None:
-        kept = delta.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, delta_path, partition_by=_base_partitioning(meta))
+    _tombstone(spark, path, build_id, ids, id_col)
+    _merge_side_table(
+        spark, path, ".delta", build_id, ids, id_col,
+        partition_by=_base_partitioning(meta),
+    )
     return n
 
 
@@ -211,20 +159,8 @@ def load_live_maxsim(spark, path: str):
     every side table build-checked. Cluster/pool filters push through the
     union, so the base scan keeps its partition pruning."""
     base, meta = load_maxsim_store(spark, path)
-    id_col = meta["id_col"]
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-    return live, meta
+    delta, ts = _side_tables(spark, path, meta["build_id"], ".delta", ".tombstones")
+    return _overlay(base, delta, delta, ts, meta["id_col"]), meta
 
 
 def live_maxsim_search(
@@ -263,63 +199,15 @@ def live_maxsim_search(
 
 
 def compact_maxsim_store(spark, path: str) -> int:
-    """Fold delta and tombstones into the base and clear them. Rewriting
-    the base changes the store's directory signature, so compact rewrites
-    the meta sidecar with the new ``store_sig`` (``build_id`` is stable —
-    no side-table or centroid restamp). Reads the RAW tables — side
-    tables checked against the META build id, the signature deliberately
-    NOT verified — so it converges when re-run from any crash point
-    (module docstring); `load_maxsim_store` refuses to SERVE any
-    intermediate state. Returns the compacted base row count."""
-    from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"maxsim store sidecar at {path + '.meta'!r} has "
-            f"{len(meta_rows)} rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0]
-    id_col = meta["id_col"]
-    base = spark.read.parquet(path)
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-
-    live = live.localCheckpoint(eager=True)
-    n = live.count()
+    """Fold delta and tombstones into the base, restamp the meta sidecar's
+    ``store_sig`` and ``n_docs`` (``build_id`` is stable — no side-table or
+    centroid restamp), and clear the side tables. Convergent from any
+    crash point; `load_maxsim_store` refuses to SERVE any intermediate
+    state. Returns the compacted base row count."""
+    meta, live, n = _raw_live(spark, path, "maxsim", ("", ".meta"))
     snapshot_overwrite(live, path, partition_by=_base_partitioning(meta))
-    snapshot_overwrite(
-        spark.createDataFrame(
-            [
-                (
-                    meta["build_id"],
-                    _store_signature(path),
-                    id_col,
-                    meta["max_tokens"],
-                    meta["dim"],
-                    n,
-                    meta["n_clusters"],
-                    ",".join(_meta_keep_cols(meta)),
-                )
-            ],
-            "build_id string, store_sig string, id_col string, "
-            "max_tokens int, dim int, n_docs long, n_clusters int, "
-            "keep_cols string",
-        ),
-        path + ".meta",
-    )
-    for side in (".tombstones", ".delta"):
-        shutil.rmtree(path + side, ignore_errors=True)
-        shutil.rmtree(path + side + ".old", ignore_errors=True)
+    _restamp_meta(spark, path, _META_SCHEMA, {
+        **meta.asDict(), "n_docs": n, "keep_cols": ",".join(_meta_keep_cols(meta)),
+    })
+    _clear_side_tables(path)
     return n

@@ -582,13 +582,17 @@ def build_colbertv2_store(
                     ",".join(keep_cols),
                 )
             ],
-            "build_id string, store_sig string, id_col string, "
-            "max_tokens int, dim int, n_docs long, n_centroids int, "
-            "keep_cols string",
+            _META_SCHEMA,
         ),
         path + ".meta",
     )
     return build_id
+
+
+_META_SCHEMA = (
+    "build_id string, store_sig string, id_col string, max_tokens int, "
+    "dim int, n_docs long, n_centroids int, keep_cols string"
+)
 
 
 def load_colbertv2_store(spark, path: str):
@@ -597,30 +601,10 @@ def load_colbertv2_store(spark, path: str):
     ``store_sig``, and store rows + quant sidecar must carry the meta's
     build id (serving codes against a different build's codebook decodes
     garbage silently — exactly what this check exists to prevent)."""
-    import os
-
     from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import recover_store
+    from photo_vector_search_spark.operators.index_maintenance import _read_meta
 
-    for suffix in ("", ".quant", ".meta"):
-        recover_store(path + suffix)
-    missing = [
-        s or "store"
-        for s in ("", ".quant", ".meta")
-        if not os.path.isdir(path + s)
-    ]
-    if missing:
-        raise ValueError(
-            f"no ColBERTv2 store at {path!r} (missing: {missing}) — run "
-            "build_colbertv2_store first"
-        )
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"ColBERTv2 store sidecar at {path + '.meta'!r} has "
-            f"{len(meta_rows)} rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0]
+    meta = _read_meta(spark, path, "ColBERTv2", ("", ".quant", ".meta"))
     sig = _store_signature(path)
     if sig != meta["store_sig"]:
         raise ValueError(

@@ -313,6 +313,44 @@ def incremental_ivfpq_index(
     return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
+def _stream_into_delta(
+    spark, input_dir, schema, key, keep, upsert, store_path, checkpoint_dir,
+    available_now,
+):
+    """The delta-segment streams: each micro-batch, deduplicated on ``key``
+    and filtered by the ``keep`` column (None: no filter), is materialized
+    and handed to the store's ``upsert`` — O(batch + delta) per batch, the
+    base (the 100 TB part) untouched until an offline compaction. The
+    frozen build_id discipline holds: the upsert stamps rows with the
+    base's build and refuses cross-build side tables. Replay-idempotent:
+    a crashed batch re-upserts the same ids into the delta, replacing its
+    own rows, so the post-replay state is byte-identical (pinned in the
+    store's maintenance tests)."""
+    stream = spark.readStream.schema(schema).format("parquet").load(input_dir)
+
+    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.dropDuplicates([key])
+        if keep is not None:
+            batch = batch.filter(keep)
+        batch = batch.localCheckpoint(eager=True)
+        if batch.count() == 0:
+            return
+        upsert(batch.sparkSession, store_path, batch)
+
+    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
+
+
+def _has_tokens():
+    """Docs with at least one token: the MaxSim and ColBERTv2 upserts refuse
+    the rest."""
+    from pyspark.sql import functions as F
+
+    from photo_vector_search_spark.functions.text import tokens
+
+    text = F.col("text")
+    return text.isNotNull() & (F.size(F.array_remove(tokens(text), "")) > 0)
+
+
 def incremental_ivf_sq8_index(
     spark: SparkSession,
     input_dir: str,
@@ -323,32 +361,18 @@ def incremental_ivf_sq8_index(
     """Stream vector batches into an EXISTING IVF,SQ8 store through its
     DELTA segment (`operators/index_maintenance.upsert_ivf_sq8_store`) —
     the O(delta)-per-batch upgrade over the merge-upsert streams above,
-    which snapshot-rewrite the WHOLE base every micro-batch: here the base
-    (the 100 TB part) is untouched until an offline compaction, and each
-    batch pays only assign+encode (map-only against the frozen
-    centroids/range) plus the small delta rewrite.
-
-    Serving reads go through ``live_ivf_sq8_topk`` (base + delta −
-    tombstones). Replay-idempotent: a crashed batch re-upserts the same
-    ids into the delta, replacing its own rows — the post-replay state is
-    byte-identical (pinned in tests/test_index_maintenance.py). The frozen
-    build_id discipline of the sibling streams holds: upsert stamps rows
-    with the base's build and refuses cross-build side tables."""
+    which snapshot-rewrite the WHOLE base every micro-batch: each batch
+    pays only assign+encode (map-only against the frozen centroids/range)
+    plus the small delta rewrite. Serving reads go through
+    ``live_ivf_sq8_topk`` (base + delta − tombstones)."""
     from photo_vector_search_spark.operators.index_maintenance import (
         upsert_ivf_sq8_store,
     )
 
-    stream = (
-        spark.readStream.schema(VECTORS_SCHEMA).format("parquet").load(input_dir)
+    return _stream_into_delta(
+        spark, input_dir, VECTORS_SCHEMA, "vec_id", None, upsert_ivf_sq8_store,
+        store_path, checkpoint_dir, available_now,
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["vec_id"]).localCheckpoint(eager=True)
-        if batch.count() == 0:
-            return
-        upsert_ivf_sq8_store(batch.sparkSession, store_path, batch)
-
-    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
 def incremental_maxsim_index(
@@ -359,43 +383,21 @@ def incremental_maxsim_index(
     available_now: bool = True,
 ):
     """Stream document batches into an EXISTING MaxSim token store through
-    its DELTA segment (`operators/maxsim_maintenance.upsert_maxsim_store`)
-    — the late-interaction sibling of ``incremental_ivf_sq8_index``: the
-    base token store (the 100 TB part) is untouched until an offline
-    compaction; each micro-batch pays only its own O(delta) token-embed
-    pass (against the frozen build params / centroids) plus the small
-    delta rewrite. Serving reads go through
-    ``maxsim_maintenance.live_maxsim_search``.
-
-    Replay-idempotent: a crashed batch re-upserts the same ids into the
-    delta, replacing its own rows — the post-replay state is byte-
-    identical (pinned in tests/test_maxsim_maintenance.py). Docs with
-    NULL/empty text are dropped BEFORE the upsert (the upsert refuses
-    them — an empty doc cannot shadow its old version; a streaming
-    pipeline deletes explicitly via ``delete_from_maxsim_store``)."""
-    from pyspark.sql import functions as F
-
-    from photo_vector_search_spark.functions.text import tokens as _tokens
+    its DELTA segment (`operators/maxsim_maintenance.upsert_maxsim_store`):
+    each micro-batch pays only its own token-embed pass against the frozen
+    build params / centroids. Serving reads go through
+    ``maxsim_maintenance.live_maxsim_search``. Docs with NULL/empty text
+    are dropped BEFORE the upsert (the upsert refuses them — an empty doc
+    cannot shadow its old version; a streaming pipeline deletes explicitly
+    via ``delete_from_maxsim_store``)."""
     from photo_vector_search_spark.operators.maxsim_maintenance import (
         upsert_maxsim_store,
     )
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(input_dir)
+    return _stream_into_delta(
+        spark, input_dir, DOCS_SCHEMA, "doc_id", _has_tokens(), upsert_maxsim_store,
+        store_path, checkpoint_dir, available_now,
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch_df.dropDuplicates(["doc_id"])
-            .filter(F.col("text").isNotNull())
-            .filter(F.size(F.array_remove(_tokens(F.col("text")), "")) > 0)
-            .localCheckpoint(eager=True)
-        )
-        if batch.count() == 0:
-            return
-        upsert_maxsim_store(batch.sparkSession, store_path, batch)
-
-    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
 DOCS_SCHEMA = "doc_id long, text string"
@@ -410,40 +412,20 @@ def incremental_cv2_index(
 ):
     """Stream document batches into an EXISTING ColBERTv2 compressed token
     store through its delta segment
-    (`operators/cv2_maintenance.upsert_colbertv2_store`) — each micro-batch
-    pays only its own O(delta) embed + encode pass against the FROZEN
-    quantizer; the base codes (the 100 TB part) stay untouched until an
-    offline compaction. Serving reads go through
-    ``cv2_maintenance.live_colbertv2_search``.
-
-    Replay-idempotent (same contract as ``incremental_maxsim_index``);
-    NULL/EMPTY-text docs are dropped BEFORE the upsert — a zero-token doc
-    has no code rows and cannot shadow its old version (the MaxSim rule,
-    unlike the BM25 store); delete explicitly via
+    (`operators/cv2_maintenance.upsert_colbertv2_store`): each micro-batch
+    pays only its own embed + encode pass against the FROZEN quantizer.
+    Serving reads go through ``cv2_maintenance.live_colbertv2_search``.
+    NULL/EMPTY-text docs are dropped BEFORE the upsert, as in
+    ``incremental_maxsim_index``; delete explicitly via
     ``delete_from_colbertv2_store``."""
-    from pyspark.sql import functions as F
-
-    from photo_vector_search_spark.functions.text import tokens as _tokens
     from photo_vector_search_spark.operators.cv2_maintenance import (
         upsert_colbertv2_store,
     )
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(input_dir)
+    return _stream_into_delta(
+        spark, input_dir, DOCS_SCHEMA, "doc_id", _has_tokens(),
+        upsert_colbertv2_store, store_path, checkpoint_dir, available_now,
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch_df.dropDuplicates(["doc_id"])
-            .filter(F.col("text").isNotNull())
-            .filter(F.size(F.array_remove(_tokens(F.col("text")), "")) > 0)
-            .localCheckpoint(eager=True)
-        )
-        if batch.count() == 0:
-            return
-        upsert_colbertv2_store(batch.sparkSession, store_path, batch)
-
-    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
 def incremental_bm25_index(
@@ -454,43 +436,24 @@ def incremental_bm25_index(
     available_now: bool = True,
 ):
     """Stream document batches into an EXISTING BM25 postings store through
-    its delta segments (`operators/bm25_store.upsert_bm25_store`) — the
-    lexical sibling of ``incremental_maxsim_index``: the base postings (the
-    100 TB part) stay frozen until an offline ``compact_bm25_store``; each
-    micro-batch pays only its own O(delta) tokenize pass plus the small
+    its delta segments (`operators/bm25_store.upsert_bm25_store`): each
+    micro-batch pays only its own tokenize pass plus the small
     bucket-partitioned delta rewrite. Serving reads go through
     ``bm25_store.live_bm25_topk``, whose live (N, avgdl) stays exact.
-
-    Replay-idempotent: a crashed batch re-upserts the same ids into the
-    deltas, replacing its own rows — post-replay state is byte-identical
-    (the upsert's postings-then-doclens write order makes the half-applied
-    state serve the OLD doc version, never a mix; pinned in
-    tests/test_bm25_store.py). NULL-text docs are dropped BEFORE the upsert
-    (unindexable — the upsert refuses them; a streaming pipeline deletes
+    NULL-text docs are dropped BEFORE the upsert (unindexable; delete
     explicitly via ``delete_from_bm25_store``). EMPTY text passes through:
-    unlike the MaxSim store, a zero-token doc is representable (a dl=0
-    doclen row, no postings) and correctly shadows its old version."""
+    a zero-token doc is representable in this store (a dl=0 doclen row, no
+    postings) and correctly shadows its old version."""
     from pyspark.sql import functions as F
 
     from photo_vector_search_spark.operators.bm25_store import (
         upsert_bm25_store,
     )
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(input_dir)
+    return _stream_into_delta(
+        spark, input_dir, DOCS_SCHEMA, "doc_id", F.col("text").isNotNull(),
+        upsert_bm25_store, store_path, checkpoint_dir, available_now,
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch_df.dropDuplicates(["doc_id"])
-            .filter(F.col("text").isNotNull())
-            .localCheckpoint(eager=True)
-        )
-        if batch.count() == 0:
-            return
-        upsert_bm25_store(batch.sparkSession, store_path, batch)
-
-    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
 def incremental_lsh_dedup(
