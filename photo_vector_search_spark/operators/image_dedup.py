@@ -120,12 +120,20 @@ def phash_images(
     in_cols = [f.name for f in decoded.schema.fields if f.name != out_col]
 
     def run(batches):
+        import pandas as pd
+
         for pdf in batches:
             pdf = pdf[in_cols].copy()
-            pdf[out_col] = pdf[content_col].map(
-                lambda c: phash_bytes(bytes(c)) if c is not None and len(c) else None
+            # object dtype from the start: Series.map over ints + None would
+            # promote to float64 and drop the low bits of 64-bit hashes
+            pdf[out_col] = pd.Series(
+                [
+                    phash_bytes(bytes(c)) if c is not None and len(c) else None
+                    for c in pdf[content_col]
+                ],
+                index=pdf.index,
+                dtype="object",
             )
-            pdf[out_col] = pdf[out_col].astype("object")
             yield pdf
 
     return decoded.mapInPandas(run, schema=out_schema)

@@ -14,15 +14,32 @@ between distinct documents.
 
 Every stage is one of the individually-tested operators; this module only
 composes them (no new semantics) and keeps per-stage survivor counts so a
-100 TB run can report what each filter cost. All stages are DataFrame-lazy
-except the near-dup stage (which stages its pair result, see
-``minhash_lsh_pairs``) and the final export.
+100 TB run can report what each filter cost.
 
-Scale shape: redact+gate are map-only and pipeline into the scan; boilerplate
-is two keyed shuffles; exact dedup one; LSH the documented banding pipeline;
-shuffle one fixed-bucket window exchange; export one hash repartition.
-Nothing quadratic, nothing driver-sized except the stats dict (a handful of
-longs) and the shuffle's ≤4096 bucket offsets.
+The pipeline is staged (``operators.staging.stage_frame``) at its two
+fan-out points, so the expensive front executes once per call:
+
+- ``gated`` — the frame after redaction, the Gopher gate and every opt-in
+  filter tier, just before exact dedup. Exact dedup, the survivor join and
+  the three subtrees of boilerplate removal all consume it; Spark does not
+  share a common subtree across branches that project differently, so
+  unstaged each of them would re-run scan → redact → gate.
+- ``deboiled`` — the frame after boilerplate removal. MinHash-LSH and the
+  near-dup anti join both consume it; staged, it is a bare parquet scan,
+  so ``minhash_lsh_pairs`` re-derives its shingles instead of persisting
+  them.
+
+Beyond those two, the near-dup stage stages its pair result (see
+``minhash_lsh_pairs``), the shuffle stages its hashed projection (see
+``shuffle_corpus``) and the export writes; every other stage is
+DataFrame-lazy.
+
+Scale shape: redact+gate are map-only and pipeline into the scan; each
+staging point is one linear parquet write; boilerplate is two keyed
+shuffles; exact dedup one; LSH the documented banding pipeline; shuffle one
+fixed-bucket window exchange; export one hash repartition. Nothing
+quadratic, nothing driver-sized except the stats dict (a handful of longs)
+and the shuffle's ≤4096 bucket offsets.
 """
 
 from __future__ import annotations
@@ -38,6 +55,7 @@ from photo_vector_search_spark.operators.dedup import (
     remove_boilerplate_lines,
 )
 from photo_vector_search_spark.operators.shuffle import shuffle_corpus
+from photo_vector_search_spark.operators.staging import stage_frame
 
 
 def curate_corpus(
@@ -251,11 +269,14 @@ def curate_corpus(
     stage's contract). ``stats["decon_rewritten"]`` counts rewritten
     survivors, ``stats["after_decontaminate"]`` the survivor set.
 
-    ``compute_stats=True`` runs one count action per stage, which re-executes
-    the (map-heavy, cheap) upstream stages each time — the expensive LSH stage
-    is exempt because it stages its pair result to parquet internally. At
-    100 TB either pass ``compute_stats=False`` (stats holds only ``input`` if
-    counted, else is empty) or persist/checkpoint between stages yourself."""
+    ``compute_stats=True`` runs one count action per stage. Each filter
+    tier's count re-executes the front from the scan, except the last
+    tier's, which reads the staged ``gated`` copy; every later count reads a
+    staged copy (``gated``, ``deboiled`` or the LSH stage's pairs) instead
+    of re-running the front. At
+    100 TB pass ``compute_stats=False`` (stats then holds only
+    ``shards_written`` when exporting) or persist/checkpoint between the
+    filter tiers yourself."""
     if near_dedup not in ("greedy", "cluster"):
         # validate BEFORE any stage executes — with compute_stats on, a typo'd
         # policy would otherwise burn four full-corpus count actions first
@@ -342,16 +363,19 @@ def curate_corpus(
         # corpora that arrive pre-filtered (or use a custom gate upstream)
         # skip the Gopher rules; every later stage is gate-agnostic
         gated = clean
-    _stat("after_quality_gate", gated)
+    # each filter tier's survivors are counted when the next tier starts; the
+    # last tier's count reads the staged copy of ``gated`` below
+    gate_stat = "after_quality_gate"
 
     if compression_bounds is not None:
         from photo_vector_search_spark.pipelines.quality import (
             compression_gate,
         )
 
+        _stat(gate_stat, gated)
+        gate_stat = "after_compression_gate"
         lo, hi = compression_bounds
         gated = compression_gate(gated, min_ratio=lo, max_ratio=hi)
-        _stat("after_compression_gate", gated)
 
     if quality_model is not None:
         from photo_vector_search_spark.pipelines.quality import (
@@ -359,12 +383,13 @@ def curate_corpus(
             score_quality,
         )
 
+        _stat(gate_stat, gated)
+        gate_stat = "after_learned_quality"
         gated = pareto_keep(
             score_quality(gated, quality_model),
             alpha=pareto_alpha,
             seed=quality_seed,
         ).drop("quality_score")
-        _stat("after_learned_quality", gated)
 
     if ppl_lm is not None:
         from photo_vector_search_spark.plans.text_queries import (
@@ -372,11 +397,12 @@ def curate_corpus(
             perplexity_buckets,
         )
 
+        _stat(gate_stat, gated)
+        gate_stat = "after_ppl_filter"
         lm_df, vocab_size = ppl_lm
         gated = ccnet_keep(
             perplexity_buckets(gated, lm_df, vocab_size, by=ppl_by)
         )
-        _stat("after_ppl_filter", gated)
 
     if kn_lm is not None and kn_keep_frac is not None:
         # kn_keep_frac=None skips the FILTER while kn_lm still feeds the
@@ -385,12 +411,13 @@ def curate_corpus(
             kn_ppl_filter,
         )
 
+        _stat(gate_stat, gated)
+        gate_stat = "after_kn_ppl"
         kn_df, kn_consts = kn_lm
         kept = kn_ppl_filter(
             gated, kn_df, kn_consts, keep_frac=kn_keep_frac, exact=kn_exact
         )
         gated = gated.join(kept.select("doc_id"), "doc_id", "left_semi")
-        _stat("after_kn_ppl", gated)
 
     if dsir_keep is not None:
         from photo_vector_search_spark.operators.dsir import (
@@ -400,6 +427,8 @@ def curate_corpus(
             dsir_select,
         )
 
+        _stat(gate_stat, gated)
+        gate_stat = "after_dsir"
         # featurize once: the staged gram frame feeds both the count table
         # and the scoring join (and, with stats on, the upstream stages are
         # not re-executed by the second DSIR pass either)
@@ -411,13 +440,14 @@ def curate_corpus(
             temperature=dsir_temperature,
             seed=dsir_seed,
         ).drop("dsir_score", "n_feats")
-        _stat("after_dsir", gated)
 
     if decon_benchmark is not None:
         from photo_vector_search_spark.operators.decontamination import (
             decontaminate_rewrite,
         )
 
+        _stat(gate_stat, gated)
+        gate_stat = "after_decontaminate"
         gated = decontaminate_rewrite(
             gated,
             decon_benchmark,
@@ -429,7 +459,11 @@ def curate_corpus(
                 F.col("n_removed_tokens") > 0
             ).count()
         gated = gated.drop("n_removed_tokens")
-        _stat("after_decontaminate", gated)
+
+    # fan-out point 1: exact dedup, the survivor join and boilerplate
+    # removal's three subtrees each read ``gated``
+    gated = stage_frame(gated, "pvs_curate_gated")
+    _stat(gate_stat, gated)
 
     fp = exact_dedup(gated)
     exact_survivors = fp.filter(F.col("doc_id") == F.col("canonical_id")).select(
@@ -442,7 +476,11 @@ def curate_corpus(
         deduped, min_docs=min_docs_boilerplate
     ).withColumnRenamed("clean", "text")
     keep_cols = [c for c in deduped.columns if c != "text"]
-    deboiled = deduped.select(*keep_cols).join(rebuilt, "doc_id")
+    # fan-out point 2: MinHash-LSH and the near-dup anti join (or the
+    # cluster policy) each read ``deboiled``
+    deboiled = stage_frame(
+        deduped.select(*keep_cols).join(rebuilt, "doc_id"), "pvs_curate_deboiled"
+    )
     _stat("after_boilerplate", deboiled)
 
     pairs = minhash_lsh_pairs(deboiled, tau=lsh_tau)
@@ -519,7 +557,6 @@ def curate_corpus(
             doc_log_perplexity_kn,
         )
         from photo_vector_search_spark.operators.selection import budget_select
-        from photo_vector_search_spark.operators.staging import stage_frame
 
         kn_df, kn_consts = kn_lm
         near = stage_frame(near, "pvs_budget_survivors")
